@@ -151,12 +151,23 @@ class FullTextIndex:
         of slop values) to ONE scan-path job with per-query slops — and
         the union is returned; when any sloppy query is present the
         ``freq`` column is DOUBLE (sloppy freqs are sums of
-        ``1/(1+matchLength)`` weights)."""
+        ``1/(1+matchLength)`` weights).
+
+        With a numeric ``k`` on a kernel-hostable index the exact
+        term/phrase queries and every kernel-able Boolean, DisMax,
+        ConstantScore and MatchAllDocs query run as ONE executor stage
+        (no job at all when the batch fits one task) with a driver
+        top-k merge (``plans/compound.py::search_mixed``); compound
+        rows carry NULL ``freq``/``norm``, exactly as the per-kind
+        union did."""
         from pyspark.sql import functions as F
 
         from pim_lucene_spark.operators.search import search
         from pim_lucene_spark.plans.boolean import BooleanQuery, \
             search_boolean
+        from pim_lucene_spark.plans.compound import (clause_kernelable,
+                                                     kernel_hostable,
+                                                     search_mixed)
         from pim_lucene_spark.plans.dismax import DisMaxQuery, search_dismax
         from pim_lucene_spark.plans.multiterm import (FuzzyQuery,
                                                       MultiTermQueryT,
@@ -211,89 +222,95 @@ class FullTextIndex:
             else:
                 sloppy.append(to_tuple(qid, q))
                 slops[qid] = s
+        # MatchAllDocsQuery(boost) ≡ BooleanQuery(must=[*:*(boost)]);
+        # ConstantScoreQuery(q, boost) ≡ BooleanQuery(
+        #   must=[MatchAllDocs(boost)], filter=[q]) — the filter gates
+        # scorelessly and the matchall contributes the constant.  Both
+        # therefore ride the compound kernel (per-partition k smallest
+        # live matching ids) instead of shipping a docs-table crossJoin
+        # or the inner match set at k=10**9; non-kernelable inners fall
+        # to the (bounded) join-chain matchall frame.  Precision float64
+        # keeps score == boost bit-exact (constant scores never touch
+        # BM25 floats).
+        from pim_lucene_spark.plans.query import PhraseQuery, TermQuery
+        clause_ok = (str, TermQuery, PhraseQuery, BooleanQuery,
+                     MatchAllDocsQuery, SynonymQuery) + MultiTermQueryT
+        wrapped, exotic = [], []
+        for qid, q in wrappers:
+            if isinstance(q, MatchAllDocsQuery):
+                wrapped.append((qid, BooleanQuery(must=[q])))
+            elif isinstance(q.query, clause_ok):
+                wrapped.append((qid, BooleanQuery(
+                    must=[MatchAllDocsQuery(boost=float(q.boost))],
+                    filter=[q.query])))
+            else:
+                # inner types with no boolean-clause form (DisMax, nested
+                # ConstantScore): recursive full evaluation, then per-qid
+                # k smallest ids at score == boost — the pre-rewrite
+                # semantics ("wraps ANY query")
+                exotic.append((qid, q))
         parts = []
-        if boolean:
-            # boolean results carry no freq/norm — surface as NULLs when
+        if k is not None and kernel_hostable({"": self.manifest}):
+            # one fused stage for the exact and kernel-able compound
+            # queries (plans/compound.py::search_mixed); the rest keep
+            # their routes below and union in
+            kmf = {"": self.manifest}
+
+            def split(qs, ok):
+                return ([(qid, q) for qid, q in qs if ok(q)],
+                        [(qid, q) for qid, q in qs if not ok(q)])
+
+            kb, jb = split(boolean, lambda q: clause_kernelable(
+                q, manifests=kmf))
+            kd, jd = split(dismax, lambda q: all(
+                clause_kernelable(c, manifests=kmf) for c in q.clauses))
+            kw, jw = split(wrapped, lambda q: clause_kernelable(
+                q, manifests=kmf))
+            fused = search_mixed(self.spark, self.manifest, exact,
+                                 [(kb + kd, precision), (kw, "float64")],
+                                 k, precision)
+            if fused is not None:
+                parts.append(fused)
+                exact, boolean, dismax, wrapped = [], jb, jd, jw
+
+        def no_freq(df):
+            # compound results carry no freq/norm — surface as NULLs when
             # unioned with term/phrase results
-            b = search_boolean(self.spark, self.manifest, boolean, k=k,
-                               precision=precision)
-            parts.append(b.select(
-                "qid", "doc_id",
-                F.lit(None).cast("double").alias("freq"),
-                F.lit(None).cast("int").alias("norm"), "score"))
+            return df.select("qid", "doc_id",
+                             F.lit(None).cast("double").alias("freq"),
+                             F.lit(None).cast("int").alias("norm"), "score")
+
+        if boolean:
+            parts.append(no_freq(search_boolean(
+                self.spark, self.manifest, boolean, k=k,
+                precision=precision)))
         if dismax:
-            d = search_dismax(self.spark, self.manifest, dismax, k=k,
-                              precision=precision)
-            parts.append(d.select(
-                "qid", "doc_id",
-                F.lit(None).cast("double").alias("freq"),
-                F.lit(None).cast("int").alias("norm"), "score"))
+            parts.append(no_freq(search_dismax(
+                self.spark, self.manifest, dismax, k=k,
+                precision=precision)))
         for mts, rewrite in ((mt_const, "constant_score"),
                              (mt_scoring, "scoring_boolean")):
-            if not mts:
-                continue
-            mt = search_multiterm(self.spark, self.manifest, mts, k=k,
-                                  rewrite=rewrite, precision=precision)
-            parts.append(mt.select(
-                "qid", "doc_id",
-                F.lit(None).cast("double").alias("freq"),
-                F.lit(None).cast("int").alias("norm"), "score"))
-        if wrappers:
-            # MatchAllDocsQuery(boost) ≡ BooleanQuery(must=[*:*(boost)]);
-            # ConstantScoreQuery(q, boost) ≡ BooleanQuery(
-            #   must=[MatchAllDocs(boost)], filter=[q]) — the filter
-            # gates scorelessly and the matchall contributes the
-            # constant.  Both therefore ride the compound kernel
-            # (per-partition k smallest live matching ids, P·k
-            # exchange) instead of shipping a docs-table crossJoin or
-            # the inner match set at k=10**9; non-kernelable inners
-            # fall to the (bounded) join-chain matchall frame.
-            # precision float64 keeps score == boost bit-exact
-            # (constant scores never touch BM25 floats).
-            from pim_lucene_spark.plans.query import PhraseQuery, TermQuery
-            clause_ok = (str, TermQuery, PhraseQuery, BooleanQuery,
-                         MatchAllDocsQuery, SynonymQuery) + MultiTermQueryT
-            wrapped, exotic = [], []
-            for qid, q in wrappers:
-                if isinstance(q, MatchAllDocsQuery):
-                    wrapped.append((qid, BooleanQuery(must=[q])))
-                elif isinstance(q.query, clause_ok):
-                    wrapped.append((qid, BooleanQuery(
-                        must=[MatchAllDocsQuery(boost=float(q.boost))],
-                        filter=[q.query])))
-                else:
-                    # inner types with no boolean-clause form (DisMax,
-                    # nested ConstantScore): recursive full evaluation,
-                    # then per-qid k smallest ids at score == boost —
-                    # the pre-rewrite semantics ("wraps ANY query")
-                    exotic.append((qid, q))
-            if wrapped:
-                b = search_boolean(self.spark, self.manifest, wrapped,
-                                   k=k, precision="float64")
-                parts.append(b.select(
-                    "qid", "doc_id",
-                    F.lit(None).cast("double").alias("freq"),
-                    F.lit(None).cast("int").alias("norm"), "score"))
-            if exotic:
-                from pyspark.sql import Window
-                inner = self.query([(qid, q.query) for qid, q in exotic],
-                                   k=None, precision=precision)
-                bmap = self.spark.createDataFrame(
-                    [(int(qid), float(q.boost)) for qid, q in exotic],
-                    "qid long, score double")
-                ids = inner.select("qid", "doc_id").distinct()
-                if k is not None:  # k=None (nested recursion): all ids
-                    win = Window.partitionBy("qid").orderBy(
-                        F.asc("doc_id"))
-                    ids = (ids.withColumn("rank",
-                                          F.row_number().over(win))
-                           .filter(F.col("rank") <= k).drop("rank"))
-                parts.append(
-                    ids.join(F.broadcast(bmap), "qid")
-                    .select("qid", "doc_id",
-                            F.lit(None).cast("double").alias("freq"),
-                            F.lit(None).cast("int").alias("norm"),
-                            "score"))
+            if mts:
+                parts.append(no_freq(search_multiterm(
+                    self.spark, self.manifest, mts, k=k, rewrite=rewrite,
+                    precision=precision)))
+        if wrapped:
+            parts.append(no_freq(search_boolean(
+                self.spark, self.manifest, wrapped, k=k,
+                precision="float64")))
+        if exotic:
+            from pyspark.sql import Window
+            inner = self.query([(qid, q.query) for qid, q in exotic],
+                               k=None, precision=precision)
+            bmap = self.spark.createDataFrame(
+                [(int(qid), float(q.boost)) for qid, q in exotic],
+                "qid long, score double")
+            ids = inner.select("qid", "doc_id").distinct()
+            if k is not None:  # k=None (nested recursion): all ids
+                win = Window.partitionBy("qid").orderBy(F.asc("doc_id"))
+                ids = (ids.withColumn("rank", F.row_number().over(win))
+                       .filter(F.col("rank") <= k).drop("rank"))
+            parts.append(no_freq(ids.join(F.broadcast(bmap), "qid")))
         if exact:
             parts.append(search(self.spark, self.manifest, exact, k=k,
                                 precision=precision))

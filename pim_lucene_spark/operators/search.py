@@ -8,14 +8,19 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    the index's stats table — the TermStatistics build of
    ``PimPhraseQuery.java:110-132``.  Queries containing a term absent from
    the whole index short-circuit to empty (``PimPhraseQuery.java:122-124``).
-2. The postings Parquet is scanned with ``term IN (query terms)`` — pushed
+2. The postings Parquet is read with ``term IN (query terms)`` — pushed
    to the Parquet reader (dictionary + row-group pruning), the analogue of
-   the per-DPU term-dictionary lookup (``term_lookup.c:107-222``).
-3. Matching posting rows are evaluated in one Arrow-vectorized
-   ``applyInPandas`` kernel per partition; the partition's norms blob
-   (1 byte/doc) is read directly from the index's ``norms/pid=N/`` Parquet
-   layout — a side-data read, never a Spark shuffle (the way a Lucene
-   segment reads its own norms file).  Kernel: vectorized varint decode →
+   the per-DPU term-dictionary lookup (``term_lookup.c:107-222``).  The
+   driver plans pid→file ownership, so each task of the ONE
+   ``Range → MapInPandas`` stage reads only its own pids' files (``pid
+   IN`` pushdown too) — or the task body runs in-process when the batch
+   fits one task (:func:`_local_route_max`).  Boolean/DisMax kernels
+   (``plans/compound.py``) share the same task body and rows.
+3. Matching posting rows are evaluated per pid by Arrow-vectorized numpy
+   kernels; the partition's norms blob (1 byte/doc) is read directly from
+   the index's ``norms/pid=N/`` Parquet layout — a side-data read, never
+   a Spark shuffle (the way a Lucene segment reads its own norms file).
+   Kernel: vectorized varint decode →
    k-way sorted docID intersection (leapfrog semantics, ``matcher.c:
    82-128``) → position alignment counting every overlapping occurrence
    (``matcher.c:133-177``) → BM25 scoring with Lucene's exact float32
@@ -39,12 +44,14 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
      them, so a pruned tail (or a stopword-heavy term) never pays its
      position-decode cost.
 
-4. Global top-k per query: window rank over (score desc, doc_id asc) —
-   Lucene ``TopScoreDocCollector`` tie-break order.
+4. Global top-k per query over (score desc, doc_id asc) —
+   Lucene ``TopScoreDocCollector`` tie-break order: a rank window in
+   ``search``'s lazy plan, a driver head-k merge for fused batches.
 
-Scale notes: only rows for query terms are shuffled (tiny); norms never
-shuffle (direct per-pid read).  The final window runs over at most
-``P * k`` rows per query.
+Scale notes: no postings row crosses an exchange (the exchange plans
+remain only as the fallback for layouts the driver cannot inspect);
+norms never shuffle (direct per-pid read).  The final merge sees at
+most ``P * k`` rows per query.
 """
 
 from __future__ import annotations
@@ -523,7 +530,12 @@ def _match_core_arrays(payload: dict, pid: int,
                        postings_pdf: pd.DataFrame | None,
                        norms: np.ndarray,
                        by_term: dict[str, list] | None = None,
-                       live: np.ndarray | None = None) -> dict | None:
+                       live: np.ndarray | None = None,
+                       ctx: "_DecodeCtx | None" = None) -> dict | None:
+    """Per-pid term/phrase kernel → arrays (qid, doc_id, freq, norm,
+    score) of the pid's top-k per query, or ``None``.  ``ctx``: a decode
+    cache over the same ``by_term`` shared with other kernels of the
+    task (the shared executor's compound kernels)."""
     out_qid, out_doc, out_freq, out_norm, out_score = [], [], [], [], []
     P = payload["num_partitions"]
     k = payload["k"]
@@ -534,7 +546,8 @@ def _match_core_arrays(payload: dict, pid: int,
     if by_term is None:
         # (the serving path passes prebuilt, resident structures)
         by_term = _assemble_by_term(postings_pdf)
-    ctx = _DecodeCtx(by_term, payload, pid)
+    if ctx is None:
+        ctx = _DecodeCtx(by_term, payload, pid)
     cache_budget = ctx.budget
     _probe_cached = ctx.probe
     _publish = ctx.publish
@@ -758,31 +771,12 @@ def _resolve_norms_access(norms_access: str, manifest) -> str:
 def _match_kernel(payload: dict):
     """Per-partition kernel; norms come from a direct per-pid Parquet read
     (``payload['norms_path']``) or, as a fallback, a cogrouped frame."""
-    norms_path = payload.get("norms_path")
+    if payload.get("norms_path") is not None:
+        xp = _exec_payload(payload, [], {})
 
-    if norms_path is not None:
         def fn(key, postings_pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(key[0])
-            if len(postings_pdf) == 0:
-                return _empty_result()
-            part_dir = os.path.join(norms_path, f"pid={pid}")
-            if not os.path.isdir(part_dir):
-                # a pid with postings always has docs, hence norms — a
-                # missing dir is a misconfiguration (unmounted index path,
-                # object-store URI): fail loudly, never return empty hits
-                raise FileNotFoundError(
-                    f"norms partition {part_dir} not visible from this "
-                    "executor; direct norms access needs a POSIX-visible "
-                    "shared mount — use search(norms_access='cogroup') "
-                    "for object stores or non-shared layouts")
-            import pyarrow.parquet as pq
-            blob = pq.read_table(part_dir, columns=["norms"]) \
-                .column("norms")[0].as_py()
-            norms = np.frombuffer(blob, dtype=np.uint8)
-            live = live_mask_for(payload.get("deletes_path"), pid,
-                                 payload["num_partitions"], norms.size)
-            return _match_core(payload, pid, postings_pdf, norms,
-                               live=live)
+            out = _task_frame(xp, {"": postings_pdf}, None, "plain")
+            return _empty_result() if out is None else out
         return fn
 
     def fn(key, postings_pdf: pd.DataFrame,
@@ -797,8 +791,10 @@ def _match_kernel(payload: dict):
     return fn
 
 
-def _match_kernel_map(payload: dict):
-    """``mapInPandas`` form of the direct-norms kernel.
+def _match_kernel_map(xp: dict):
+    """``mapInPandas`` form of the direct-norms kernel over an exchange —
+    the fallback when the driver cannot plan file ownership
+    (:func:`_pid_file_groups` returns ``None``: URI layouts).
 
     The default ``groupBy(pid).applyInPandas`` plan works, but AQE
     coalesces its tiny shuffle to ONE post-shuffle task, serializing
@@ -807,9 +803,10 @@ def _match_kernel_map(payload: dict):
     quiet machine).  Instead the caller hash-repartitions by ``pid``
     into an explicitly chosen task count (explicit ``repartition(n,
     col)`` is user-specified partitioning, which AQE never coalesces),
-    and this kernel re-groups whole pid groups from the task's batches —
-    co-location is guaranteed by the hash exchange, so results are
-    identical to the per-group form (differential-tested).
+    and the shared task body (:func:`_task_frame`) re-groups whole pid
+    groups from the task's batches — co-location is guaranteed by the
+    hash exchange, so results are identical to the per-group form
+    (differential-tested).
     """
     def fn(it):
         parts = [pdf for pdf in it if len(pdf)]
@@ -817,73 +814,291 @@ def _match_kernel_map(payload: dict):
             return
         allp = (pd.concat(parts, ignore_index=True)
                 if len(parts) > 1 else parts[0])
-        yield from _iter_pid_results(payload, allp)
+        out = _task_frame(xp, {"": allp}, None, "plain")
+        if out is not None:
+            yield out
     return fn
 
 
-def _iter_pid_results(payload: dict, allp: pd.DataFrame):
-    """Run the direct-norms match kernel over every whole pid group in
-    ``allp`` (shared by the exchange-fed and file-fed kernel forms)."""
+# ---------------------------------------------------------------------------
+# the shared executor: one task body for plain (term/phrase) and compound
+# (Boolean/DisMax) kernels.  A task owns a pid set, reads each field's
+# postings for it once (pyarrow ``term IN`` + ``pid IN`` pushdown), reads
+# each owned pid's norms blob and live mask once, runs every kernel on the
+# same rows and emits per-pid top-k.  It runs as one ``Range →
+# MapInPandas`` stage (:func:`_owned_kernel`) or, below the inline gate,
+# in-process (:func:`_run_inline`); the driver then merges the head-k.
+# ---------------------------------------------------------------------------
+
+# task output of a fused batch: ``part`` 0 = plain rows, i ≥ 1 = rows of
+# the i-th compound payload (their freq/norm are placeholders the driver
+# nulls out)
+FUSED_TASK_SCHEMA = T.StructType([
+    T.StructField("part", T.IntegerType(), False),
+    *RESULT_SCHEMA.fields,
+])
+
+# a mixed batch's result: compound rows carry NULL freq/norm
+MIXED_SCHEMA = T.StructType([
+    T.StructField("qid", T.LongType(), False),
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("freq", T.DoubleType(), True),
+    T.StructField("norm", T.IntegerType(), True),
+    T.StructField("score", T.DoubleType(), False),
+])
+
+_PLAIN_COLS = ("qid", "doc_id", "freq", "norm", "score")
+
+
+def _exec_payload(plain: dict | None, compound: list[dict],
+                  terms: dict[str, list[str]]) -> dict:
+    """Executor payload: the plain search payload (field ``""``), the
+    compound payloads, and per field the terms to read, the norms and
+    delete-vector paths and the decode-cache key (the decode budget is
+    the first payload's ``postings_cache_mb``)."""
+    metas = ([{"": plain}] if plain is not None else []) + \
+        [cp["fields"] for cp in compound]
+    fields: dict[str, dict] = {}
+    for meta_of in metas:
+        for f, meta in meta_of.items():
+            fields.setdefault(f, {
+                k: meta.get(k)
+                for k in ("norms_path", "deletes_path", "cache_key")})
+    for f, meta in fields.items():
+        meta["terms"] = sorted(terms.get(f, ()))
+    first = plain if plain is not None else compound[0]
+    return {"P": int(first["num_partitions"]), "plain": plain,
+            "compound": compound, "fields": fields,
+            "postings_cache_mb": first.get("postings_cache_mb", 0),
+            "matchall": any(cp.get("has_matchall") for cp in compound)}
+
+
+def _read_rows(xp: dict, files: dict[str, list[str]],
+               pids: list[int] | None) -> dict[str, pd.DataFrame]:
+    """Each field's postings rows for the needed terms from ``files``
+    (Parquet files or chunk directories), ``pid IN pids`` pushed down
+    too when the caller owns a pid subset."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
-    norms_path = payload["norms_path"]
-    for pid, grp in allp.groupby("pid", sort=True):
-        pid = int(pid)
-        part_dir = os.path.join(norms_path, f"pid={pid}")
-        if not os.path.isdir(part_dir):
-            # same loud contract as _match_kernel's direct path
-            raise FileNotFoundError(
-                f"norms partition {part_dir} not visible from this "
-                "executor; direct norms access needs a POSIX-visible "
-                "shared mount — use search(norms_access='cogroup') "
-                "for object stores or non-shared layouts")
-        blob = pq.read_table(part_dir, columns=["norms"]) \
-            .column("norms")[0].as_py()
-        norms = np.frombuffer(blob, dtype=np.uint8)
-        live = live_mask_for(payload.get("deletes_path"), pid,
-                             payload["num_partitions"], norms.size)
-        out = _match_core(payload, pid, grp, norms, live=live)
-        if len(out):
-            yield out
+    out = {}
+    for f, meta in xp["fields"].items():
+        if not meta["terms"] or not files.get(f):
+            continue
+        filters = [("term", "in", meta["terms"])]
+        if pids is not None:
+            filters.append(("pid", "in", list(pids)))
+        tables = [t for t in (pq.read_table(p, filters=filters)
+                              for p in files[f]) if t.num_rows]
+        if tables:
+            out[f] = (pa.concat_tables(tables) if len(tables) > 1
+                      else tables[0]).to_pandas()
+    return out
 
 
-def _match_kernel_files(payload: dict):
+def _read_norms(norms_path: str, pids: list[int]) -> dict[int, np.ndarray]:
+    """Norms blobs of ``pids`` from ONE filtered read of the norms dataset
+    (per-pid directory reads cost a dataset discovery each).  A pid with
+    postings always has docs, hence norms: a missing blob is a
+    misconfiguration (unmounted index path, object-store URI) and fails
+    loudly instead of returning empty hits."""
+    import pyarrow.parquet as pq
+    tbl = pq.read_table(norms_path, filters=[("pid", "in", pids)],
+                        columns=["pid", "norms"])
+    out: dict[int, np.ndarray] = {}
+    for p, b in zip(tbl.column("pid").to_pylist(),
+                    tbl.column("norms").to_pylist()):
+        # one blob row per pid; keep the first like a per-pid read's
+        # ``column("norms")[0]``
+        out.setdefault(int(p), np.frombuffer(b, dtype=np.uint8))
+    missing = sorted(set(pids) - set(out))
+    if missing:
+        raise FileNotFoundError(
+            f"norms partitions pid={missing} missing under {norms_path}; "
+            "direct norms access needs a POSIX-visible shared mount — use "
+            "search(norms_access='cogroup') for object stores or "
+            "non-shared layouts")
+    return out
+
+
+def _eval_rows(xp: dict, rows: dict[str, pd.DataFrame],
+               pids: list[int] | None):
+    """Run every kernel of ``xp`` per pid over the same rows → yields
+    ``(part, result)``: part 0 = plain arrays
+    (:func:`_match_core_arrays`), part i ≥ 1 = the i-th compound
+    payload's frame (``_compound_core``).  ``pids`` (the task's owned
+    set, ``None`` = every pid) is enumerated in full only when a
+    MatchAllDocs clause needs postings-less partitions."""
+    from pim_lucene_spark.plans.compound import _compound_core
+    by_pid: dict[int, dict[str, dict]] = {}
+    for f, pdf in rows.items():
+        for pid, grp in pdf.groupby("pid", sort=False):
+            by_pid.setdefault(int(pid), {})[f] = _assemble_by_term(grp)
+    if xp["matchall"]:
+        for pid in (pids if pids is not None else range(xp["P"])):
+            by_pid.setdefault(int(pid), {})
+    plain, compound = xp["plain"], xp["compound"]
+    need: dict[str, set] = {}
+    for pid, bf in by_pid.items():
+        if plain is not None and "" in bf:
+            need.setdefault("", set()).add(pid)
+        for cp in compound:
+            for f in cp["fields"]:
+                if f in bf or cp.get("has_matchall"):
+                    need.setdefault(f, set()).add(pid)
+    norms = {f: _read_norms(xp["fields"][f]["norms_path"], sorted(ps))
+             for f, ps in need.items()}
+    for pid in sorted(by_pid):
+        bf = by_pid[pid]
+        # one decode cache per field: kernels sharing a term decode it once
+        ctxs = {f: _DecodeCtx(bt, xp, pid,
+                              ckey=xp["fields"][f]["cache_key"])
+                for f, bt in bf.items()}
+        resident = {}
+        for f, nb in norms.items():
+            if pid in nb:
+                resident[f] = (nb[pid], live_mask_for(
+                    xp["fields"][f]["deletes_path"], pid, xp["P"],
+                    nb[pid].size))
+        if plain is not None and "" in bf:
+            a = _match_core_arrays(plain, pid, None, resident[""][0],
+                                   by_term=bf[""], live=resident[""][1],
+                                   ctx=ctxs[""])
+            if a is not None:
+                yield 0, a
+        for i, cp in enumerate(compound, 1):
+            sub = {f: bf[f] for f in cp["fields"] if f in bf}
+            if not sub and not cp.get("has_matchall"):
+                continue
+            out = _compound_core(cp, pid, sub, resident={
+                f: resident[f] for f in cp["fields"] if f in resident},
+                ctxs=ctxs)
+            if len(out):
+                yield i, out
+
+
+def _task_frame(xp: dict, rows: dict[str, pd.DataFrame],
+                pids: list[int] | None, mode: str) -> pd.DataFrame | None:
+    """One task's output frame: ``mode`` ``'plain'`` (RESULT_SCHEMA),
+    ``'compound'`` (the compound payload's own columns) or ``'fused'``
+    (FUSED_TASK_SCHEMA); ``None`` when nothing matched."""
+    plain, comp = [], []
+    for part, res in _eval_rows(xp, rows, pids):
+        (plain if part == 0 else comp).append((part, res))
+    frames = []
+    if plain and mode != "compound":
+        a = {c: np.concatenate([r[c] for _, r in plain])
+             for c in _PLAIN_COLS}
+        if mode == "fused":
+            a = {"part": np.zeros(a["qid"].size, dtype=np.int32), **a}
+        frames.append(pd.DataFrame(a))
+    if comp and mode != "plain":
+        for part, f in comp:
+            if mode == "fused":
+                f = pd.DataFrame({
+                    "part": np.full(len(f), part, dtype=np.int32),
+                    "qid": f["qid"].to_numpy(),
+                    "doc_id": f["doc_id"].to_numpy(),
+                    "freq": np.zeros(len(f), dtype=np.int64),
+                    "norm": np.zeros(len(f), dtype=np.int32),
+                    "score": f["score"].to_numpy()})
+            frames.append(f)
+    if not frames:
+        return None
+    return (pd.concat(frames, ignore_index=True) if len(frames) > 1
+            else frames[0])
+
+
+def _owned_kernel(xp: dict, groups: list, mode: str):
     """Single-stage kernel: each task reads its ASSIGNED postings files
-    directly with pyarrow ``term IN`` pushdown and runs the per-pid match
-    kernel — no Exchange at all (guide §2.4 / §8.4 "co-locate instead of
-    join": the postings Parquet is already laid out by pid, so the
-    repartition-by-pid shuffle only re-creates a grouping the files
-    already have).  The driver's file plan (:func:`_postings_file_groups`)
-    guarantees every pid's rows live in exactly one task, which is the
-    same co-location contract the hash exchange gave; the kernel itself
-    is identical, so results are identical (differential-tested).
+    directly with pyarrow ``term IN`` + ``pid IN`` pushdown and runs the
+    shared task body — no Exchange at all (guide §2.4 / §8.4 "co-locate
+    instead of join": the postings Parquet is already laid out by pid,
+    so a repartition-by-pid shuffle only re-creates a grouping the files
+    already have).  The driver's file plan (:func:`_pid_file_groups`)
+    guarantees every pid's rows live in exactly one task, the same
+    co-location contract the hash exchange gives, so results are
+    identical (differential-tested).
 
-    This is the distributed twin of the serving path's pyarrow read
-    (``_local_rows``) and the reference's DPU model: each task owns its
-    shard and reads it locally.  Needs POSIX-visible index files from
-    every executor — exactly the precondition of direct norms access,
-    which gates this plan.
-    """
-    groups = payload["file_groups"]
-    terms = list(payload["needed_terms"])
-
+    This is the distributed twin of the serving path's pyarrow read and
+    the reference's DPU model: each task owns its shard and reads it
+    locally.  Needs POSIX-visible index files from every executor —
+    exactly the precondition of direct norms access, which gates it."""
     def fn(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         for pdf in it:
             for gi in pdf["id"]:
-                files, pids = groups[int(gi)]
-                filters = [("term", "in", terms), ("pid", "in", pids)]
-                tables = []
-                for f in files:
-                    t = pq.read_table(f, filters=filters)
-                    if t.num_rows:
-                        tables.append(t)
-                if not tables:
-                    continue
-                allp = (pa.concat_tables(tables) if len(tables) > 1
-                        else tables[0]).to_pandas()
-                yield from _iter_pid_results(payload, allp)
+                pids, files = groups[int(gi)]
+                out = _task_frame(xp, _read_rows(xp, files, pids), pids,
+                                  mode)
+                if out is not None:
+                    yield out
     return fn
+
+
+def _run_inline(xp: dict, manifests: dict[str, IndexManifest],
+                mode: str) -> pd.DataFrame | None:
+    """The task body in-process over every pid: pyarrow ``term IN`` read
+    of each field's postings chunks (no residency caches — every call
+    re-reads Parquet; the decode cache obeys ``postings_cache_mb``
+    exactly as a kernel task would)."""
+    files = {f: [m.chunk_path(c) for c in range(m.build_chunks)]
+             for f, m in manifests.items()}
+    return _task_frame(xp, _read_rows(xp, files, None), None, mode)
+
+
+def _inline_ok(total_df: int, manifests) -> bool:
+    """The inline gate: Σdf fits one task's budget
+    (:func:`_local_route_max`) and every field's chunks are
+    driver-visible."""
+    lim = _local_route_max()
+    return (lim > 0 and total_df <= lim
+            and all(_chunks_posix(m) for m in manifests))
+
+
+def _top_k(pdf: pd.DataFrame, k: int, by=("qid",)) -> pd.DataFrame:
+    """Driver head-k per ``by`` in (score desc, doc_id asc) order —
+    Lucene ``TopScoreDocCollector`` tie-break."""
+    if not len(pdf):
+        return pdf
+    keys = list(by)
+    return (pdf.sort_values(keys + ["score", "doc_id"],
+                            ascending=[True] * len(keys) + [False, True])
+            .groupby(keys, sort=True).head(k))
+
+
+def _run_fused(spark: SparkSession, manifests: dict[str, IndexManifest],
+              xp: dict, total_df: int, k: int,
+              mixed: bool) -> DataFrame | None:
+    """Run a planned fused batch (:func:`_exec_payload`) as ONE
+    ``Range → MapInPandas`` stage — or in-process below the inline gate
+    — then merge the head-k per (part, qid) on the driver.  Returns a
+    job-free local DataFrame: MIXED_SCHEMA (NULL freq/norm on compound
+    rows) when the batch has compound queries (``mixed``), else
+    RESULT_SCHEMA.  ``None`` when the pid→file ownership cannot be
+    planned (the caller takes its exchange routes)."""
+    if _inline_ok(total_df, manifests.values()):
+        pdf = _run_inline(xp, manifests, "fused")
+    else:
+        groups = _pid_file_groups(
+            manifests, _kernel_task_count(xp["P"], total_df),
+            every_pid=xp["matchall"])
+        if groups is None:
+            return None
+        pdf = (spark.range(0, len(groups), 1, len(groups))
+               .mapInPandas(_owned_kernel(xp, groups, "fused"),
+                            FUSED_TASK_SCHEMA)
+               .toPandas())
+    schema = MIXED_SCHEMA if mixed else RESULT_SCHEMA
+    if pdf is None or not len(pdf):
+        return local_empty(spark, schema)
+    pdf = _top_k(pdf, k, ("part", "qid"))
+    comp = pdf["part"].to_numpy() > 0
+    out = pd.DataFrame({c: pdf[c].to_numpy() for c in _PLAIN_COLS})
+    if mixed:
+        out["freq"] = np.where(comp, np.nan, out["freq"].to_numpy(
+            dtype=np.float64))
+        out["norm"] = pd.array(out["norm"].to_numpy(), dtype="Int32")
+        out.loc[comp, "norm"] = pd.NA
+    return local_result(spark, out, schema)
 
 
 def _local_route_max() -> int:
@@ -898,19 +1113,22 @@ def _local_route_max() -> int:
     driver runs that one task's kernel in-process instead — the exact
     job the cluster would have executed, minus the scheduler (and the
     reference engine's own query path is host-resident for the same
-    reason).  The ceiling is volume-derived (the same one-task target
-    the task-count heuristic uses), not core-count-derived; 0 disables
-    the route entirely.  Measured break-evens on this host class
-    (quiet): a single hot-term query still wins inline at Σdf = 500k
+    reason).  The ceiling is volume-derived (by default the same
+    one-task target the task-count heuristic uses), not
+    core-count-derived; 0 disables the route entirely.  Measured
+    break-evens on this host class (quiet): a single hot-term query
+    still wins inline at Σdf = 500k
     (284 vs 485 ms) and loses by Σdf = 1M (1466 vs 592 ms), but a
     20-phrase batch at Σdf = 108k already loses (570-890 ms inline vs
     ~330 ms distributed — per-posting work grows with query count), so
     the default stays at the conservative single-task budget rather
-    than the single-query crossover."""
-    v = os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS")
-    if v is not None:
-        return int(v)
-    return int(os.environ.get("SPARK_GRAFT_POSTINGS_PER_TASK",
+    than the single-query crossover.
+
+    The ceiling has its own knob, ``SPARK_GRAFT_LOCAL_ROUTE_POSTINGS``:
+    raising ``SPARK_GRAFT_POSTINGS_PER_TASK`` for cluster task sizing
+    must not widen driver-inline routing, which the calibration above
+    shows loses 2-3x on multi-query batches."""
+    return int(os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS",
                               str(1 << 16)))
 
 
@@ -922,54 +1140,6 @@ def _chunks_posix(manifest: IndexManifest) -> bool:
         if "://" in p or not os.path.isdir(p):
             return False
     return True
-
-
-def _search_inline(manifest: IndexManifest, payload: dict,
-                   needed_terms) -> pd.DataFrame:
-    """One-task kernel run in-process: pyarrow ``term IN`` read of the
-    postings chunks (no residency caches — every call re-reads Parquet;
-    the decode cache obeys ``payload['postings_cache_mb']`` exactly as a
-    kernel task would), then the identical per-pid match kernel.  The
-    hit pids' norms blobs come from ONE filtered read of the norms
-    dataset (per-pid directory reads cost a dataset discovery each)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    filters = [("term", "in", list(needed_terms))]
-    tables = [pq.read_table(manifest.chunk_path(c), filters=filters)
-              for c in range(manifest.build_chunks)]
-    tables = [t for t in tables if t.num_rows]
-    if not tables:
-        return _empty_result()
-    allp = (pa.concat_tables(tables) if len(tables) > 1
-            else tables[0]).to_pandas()
-    hit_pids = sorted(int(p) for p in allp["pid"].unique())
-    ntbl = pq.read_table(payload["norms_path"],
-                         filters=[("pid", "in", hit_pids)],
-                         columns=["pid", "norms"])
-    norms_by_pid: dict[int, np.ndarray] = {}
-    for p, b in zip(ntbl.column("pid").to_pylist(),
-                    ntbl.column("norms").to_pylist()):
-        # one blob row per pid; keep the first like the kernels'
-        # ``column("norms")[0]`` read
-        norms_by_pid.setdefault(int(p), np.frombuffer(b, dtype=np.uint8))
-    outs = []
-    for pid, grp in allp.groupby("pid", sort=True):
-        pid = int(pid)
-        norms = norms_by_pid.get(pid)
-        if norms is None:
-            # a pid with postings always has docs, hence norms — same
-            # loud contract as the kernels' direct path
-            raise FileNotFoundError(
-                f"norms partition pid={pid} missing under "
-                f"{payload['norms_path']}")
-        live = live_mask_for(payload.get("deletes_path"), pid,
-                             payload["num_partitions"], norms.size)
-        out = _match_core(payload, pid, grp, norms, live=live)
-        if len(out):
-            outs.append(out)
-    if not outs:
-        return _empty_result()
-    return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
 
 
 def _kernel_task_count(num_partitions: int, total_postings: int) -> int:
@@ -1046,26 +1216,44 @@ def _postings_pid_map(manifest: IndexManifest) -> dict | None:
     return pid_map
 
 
-def _postings_file_groups(manifest: IndexManifest, n_tasks: int
-                          ) -> list[tuple[list[str], list[int]]] | None:
+def _pid_file_groups(manifests: dict[str, IndexManifest], n_tasks: int,
+                     every_pid: bool = False
+                     ) -> list[tuple[list[int], dict[str, list[str]]]] | None:
     """Bin-pack pids into ``n_tasks`` task groups (LPT greedy on the
-    per-pid byte estimate — a better balance than the hash exchange's
-    modulo placement).  Each group is ``(files, pids)``: the task reads
-    those files with ``pid IN pids`` (+ ``term IN``) pushdown, so a pid
-    is owned by exactly ONE task no matter how the writer laid out the
-    files.  ``None`` → use the exchange plan."""
-    pid_map = _postings_pid_map(manifest)
-    if not pid_map:
+    per-pid byte estimate summed over fields — a better balance than the
+    hash exchange's modulo placement).  Each group is ``(pids, {field:
+    files})``: the task reads those files with ``pid IN pids`` (+ ``term
+    IN``) pushdown, so a pid is owned by exactly ONE task no matter how
+    the writer laid out the files, and every field's sub-index shares
+    the one pid space.  ``every_pid`` also hands out pids without
+    postings (MatchAllDocs enumerates them from norms).  ``None`` → use
+    the exchange plan (some field's layout cannot be inspected, or
+    ``SPARK_GRAFT_DIRECT_SCAN=0``)."""
+    if os.environ.get("SPARK_GRAFT_DIRECT_SCAN") == "0":
         return None
-    n = max(1, min(int(n_tasks), len(pid_map)))
-    bins: list[list] = [[0.0, [], set()] for _ in range(n)]
-    for pid, (w, files) in sorted(pid_map.items(),
-                                  key=lambda kv: (-kv[1][0], kv[0])):
+    weight: dict[int, float] = {}
+    files_of: dict[int, dict[str, list[str]]] = {}
+    for f, m in manifests.items():
+        pid_map = _postings_pid_map(m)
+        if not pid_map:
+            return None
+        for pid, (w, files) in pid_map.items():
+            weight[pid] = weight.get(pid, 0.0) + w
+            files_of.setdefault(pid, {})[f] = files
+    if every_pid:
+        for m in manifests.values():
+            for pid in range(m.num_partitions):
+                weight.setdefault(pid, 0.0)
+    n = max(1, min(int(n_tasks), len(weight)))
+    bins: list[list] = [[0.0, [], {}] for _ in range(n)]
+    for pid, w in sorted(weight.items(), key=lambda kv: (-kv[1], kv[0])):
         tgt = min(bins, key=lambda b: b[0])
         tgt[0] += w
         tgt[1].append(pid)
-        tgt[2].update(files)
-    return [(sorted(fs), pids) for _, pids, fs in bins if pids]
+        for f, files in files_of.get(pid, {}).items():
+            tgt[2].setdefault(f, set()).update(files)
+    return [(pids, {f: sorted(fs) for f, fs in files.items()})
+            for _, pids, files in bins if pids]
 
 
 # term → doc_freq cache per index generation (0 = negative entry).  The
@@ -1192,6 +1380,48 @@ def plan_queries(spark: SparkSession, manifest: IndexManifest,
     return planned, needed_terms
 
 
+def _plain_payload(spark: SparkSession | None, manifest: IndexManifest,
+                   queries: list[tuple], k: int, precision: str, *,
+                   direct: bool = True, postings_cache_mb: int = 0,
+                   after: dict | None = None) -> tuple[dict | None, list]:
+    """Plan a term/phrase batch (:func:`plan_queries`) into the kernel
+    payload → ``(payload, needed_terms)``; ``(None, [])`` when no query
+    can match.  ``direct`` = the kernel reads norms from the per-pid
+    layout itself (``spark=None`` plans via pyarrow, the serving
+    path)."""
+    gap_offsets: dict = {}
+    planned, needed_terms = plan_queries(spark, manifest, queries, k,
+                                         precision,
+                                         collect_offsets=gap_offsets)
+    if not planned:
+        return None, []
+    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
+                                  manifest.doc_count, precision)
+    payload = {
+        "queries": planned,
+        "k": int(k),
+        "precision": precision,
+        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
+        "num_partitions": manifest.num_partitions,
+        "num_segments": manifest.num_segments,
+        "norms_path": manifest.norms_path if direct else None,
+        # v1/v2 manifests have no build_id — mix in content-derived stats
+        # (as _stats_cache_key does) so an in-place rebuild of a legacy
+        # index cannot serve stale decoded postings from warm workers
+        "cache_key": (manifest.build_id or manifest.index_dir,
+                      manifest.doc_count, manifest.sum_total_term_freq),
+        "postings_cache_mb": int(postings_cache_mb),
+        "deletes_path": (manifest.deletes_path if manifest.delete_gen
+                         else None),
+    }
+    if after:
+        payload["after"] = {int(q): (float(s), int(d))
+                            for q, (s, d) in after.items()}
+    if gap_offsets:
+        payload["offsets"] = gap_offsets
+    return payload, needed_terms
+
+
 def term_doc_freqs(spark: SparkSession | None, manifest: IndexManifest,
                    all_terms: list[str]) -> dict[str, int]:
     """doc_freq per exact term (0 for absent), via the cross-batch stats
@@ -1297,11 +1527,7 @@ def _search_sync_rounds(spark, postings, payload: dict, k: int,
         res = pdf[pdf["norm"] >= 0]
         acc = res if acc is None else pd.concat([acc, res],
                                                 ignore_index=True)
-        if len(acc):
-            acc = (acc.sort_values(["qid", "score", "doc_id"],
-                                   ascending=[True, False, True])
-                   .groupby("qid", sort=False).head(k)
-                   .reset_index(drop=True))
+        acc = _top_k(acc, k).reset_index(drop=True)
         bounds = {int(qid): float(grp["score"].min())
                   for qid, grp in acc.groupby("qid")
                   if len(grp) >= k}
@@ -1400,52 +1626,28 @@ def search(spark: SparkSession, index: IndexManifest | str,
         # thresholds are inert above any real match count
         k = 10 ** 9
     manifest = IndexManifest.load(index) if isinstance(index, str) else index
-    gap_offsets: dict = {}
-    planned, needed_terms = plan_queries(spark, manifest, queries, k,
-                                         precision,
-                                         collect_offsets=gap_offsets)
-    if not planned:
-        return local_empty(spark, RESULT_SCHEMA)
-
-    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                  manifest.doc_count, precision)
     norms_access = _resolve_norms_access(norms_access, manifest)
     use_direct = norms_access == "direct" and manifest.version >= 3
-    payload = {
-        "queries": planned,
-        "k": int(k),
-        "precision": precision,
-        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
-        "num_partitions": manifest.num_partitions,
-        "num_segments": manifest.num_segments,
-        "norms_path": manifest.norms_path if use_direct else None,
-        # v1/v2 manifests have no build_id — mix in content-derived stats
-        # (as _stats_cache_key does) so an in-place rebuild of a legacy
-        # index cannot serve stale decoded postings from warm workers
-        "cache_key": (manifest.build_id or manifest.index_dir,
-                      manifest.doc_count, manifest.sum_total_term_freq),
-        "postings_cache_mb": int(postings_cache_mb),
-        "deletes_path": (manifest.deletes_path if manifest.delete_gen
-                         else None),
-    }
-    if after:
-        payload["after"] = {int(q): (float(s), int(d))
-                            for q, (s, d) in after.items()}
-    if gap_offsets:
-        payload["offsets"] = gap_offsets
+    payload, needed_terms = _plain_payload(
+        spark, manifest, queries, k, precision, direct=use_direct,
+        postings_cache_mb=postings_cache_mb, after=after)
+    if payload is None:
+        return local_empty(spark, RESULT_SCHEMA)
 
     if use_direct and not bound_probe:
         total_df = sum(term_doc_freqs(spark, manifest,
                                       list(needed_terms)).values())
-        if 0 < total_df <= _local_route_max() and _chunks_posix(manifest):
-            # one-task-sized query: run the kernel in-process (the job
+        if _inline_ok(total_df, [manifest]):
+            # one-task-sized query: run the task body in-process (the job
             # the cluster would run, minus the scheduler — see
             # _local_route_max); identical results, differential-tested
-            pdf = _search_inline(manifest, payload, needed_terms)
-            if not unbounded and len(pdf):
-                pdf = (pdf.sort_values(["qid", "score", "doc_id"],
-                                       ascending=[True, False, True])
-                       .groupby("qid", sort=True).head(k))
+            pdf = _run_inline(_exec_payload(payload, [],
+                                            {"": needed_terms}),
+                              {"": manifest}, "plain")
+            if pdf is None:
+                return local_empty(spark, RESULT_SCHEMA)
+            if not unbounded:
+                pdf = _top_k(pdf, k)
             return local_result(spark, pdf, RESULT_SCHEMA)
 
     postings = (cached_parquet(spark, manifest_scan_key(manifest),
@@ -1482,21 +1684,19 @@ def search(spark: SparkSession, index: IndexManifest | str,
         dfs = term_doc_freqs(spark, manifest, list(needed_terms))
         n_tasks = _kernel_task_count(manifest.num_partitions,
                                      sum(dfs.values()))
-        groups = (None if os.environ.get("SPARK_GRAFT_DIRECT_SCAN") == "0"
-                  else _postings_file_groups(manifest, n_tasks))
+        xp = _exec_payload(payload, [], {"": needed_terms})
+        groups = _pid_file_groups({"": manifest}, n_tasks)
         if groups is not None:
             # zero-Exchange single-stage job: tasks read their assigned
             # pid-complete postings files directly (guide §2.4; the
             # repartition below only re-creates the grouping the file
             # layout already has)
-            payload = dict(payload, file_groups=groups,
-                           needed_terms=list(needed_terms))
             per_part = (spark.range(0, len(groups), 1, len(groups))
-                        .mapInPandas(_match_kernel_files(payload),
+                        .mapInPandas(_owned_kernel(xp, groups, "plain"),
                                      RESULT_SCHEMA))
         else:
             per_part = (postings.repartition(n_tasks, "pid")
-                        .mapInPandas(_match_kernel_map(payload),
+                        .mapInPandas(_match_kernel_map(xp),
                                      RESULT_SCHEMA))
     else:
         norms = cached_parquet(spark, manifest_scan_key(manifest),
@@ -1509,12 +1709,8 @@ def search(spark: SparkSession, index: IndexManifest | str,
         return per_part
 
     if final_merge == "driver":
-        pdf = per_part.toPandas()
-        if len(pdf):
-            pdf = (pdf.sort_values(["qid", "score", "doc_id"],
-                                   ascending=[True, False, True])
-                   .groupby("qid", sort=True).head(k))
-        return local_result(spark, pdf, RESULT_SCHEMA)
+        return local_result(spark, _top_k(per_part.toPandas(), k),
+                            RESULT_SCHEMA)
 
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (per_part
@@ -1700,36 +1896,14 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     as :func:`search`.
     """
     manifest = IndexManifest.load(index) if isinstance(index, str) else index
-    gap_offsets: dict = {}
-    planned, needed_terms = plan_queries(None, manifest, queries, k,
-                                         precision,
-                                         collect_offsets=gap_offsets)
-    if not planned:
+    payload, needed_terms = _plain_payload(
+        None, manifest, queries, k, precision,
+        postings_cache_mb=postings_cache_mb, after=after)
+    if payload is None:
         # public API boundary: hand out a copy, never the shared cached
         # frame (a caller mutating its result must not poison every
         # later empty result in the process)
         return _empty_result().copy()
-    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                  manifest.doc_count, precision)
-    payload = {
-        "queries": planned,
-        "k": int(k),
-        "precision": precision,
-        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
-        "num_partitions": manifest.num_partitions,
-        "num_segments": manifest.num_segments,
-        "norms_path": manifest.norms_path,
-        "cache_key": (manifest.build_id or manifest.index_dir,
-                      manifest.doc_count, manifest.sum_total_term_freq),
-        "postings_cache_mb": int(postings_cache_mb),
-        "deletes_path": (manifest.deletes_path if manifest.delete_gen
-                         else None),
-    }
-    if after:
-        payload["after"] = {int(q): (float(s), int(d))
-                            for q, (s, d) in after.items()}
-    if gap_offsets:
-        payload["offsets"] = gap_offsets
     ckey = payload["cache_key"]
     by_pid = _local_rows(manifest, ckey, list(needed_terms), pids=pids)
     outs = []
@@ -1746,7 +1920,5 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     # next-biggest serving cost after the empty-frame fix)
     res = pd.DataFrame({c: (np.concatenate([p[c] for p in outs])
                             if len(outs) > 1 else outs[0][c])
-                        for c in ("qid", "doc_id", "freq", "norm", "score")})
-    return (res.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby("qid", sort=True).head(k).reset_index(drop=True))
+                        for c in _PLAIN_COLS})
+    return _top_k(res, k).reset_index(drop=True)

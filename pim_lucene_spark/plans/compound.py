@@ -8,10 +8,12 @@ push per-clause match sets through a shuffle: each partition evaluates
 every clause locally against its co-located postings (shared decode
 cache), composes per doc in numpy — in clause-declaration order, the
 exact float association of the join-chain plan and the DuckDB oracles —
-and emits only its top-k composed rows.  One shuffle of ≤ P·k rows per
-query replaces the former ``k=10**9`` clause frames + full-outer-join
-chains (the round-3 scale defect: a stopword SHOULD clause used to ship
-its entire match set through the exchange).
+and emits only its top-k composed rows.  The partitions run on the
+search path's file-owned executor (one ``Range → MapInPandas`` stage,
+shared with term/phrase queries in a mixed batch) and the driver merges
+≤ P·k rows per query — replacing the former ``k=10**9`` clause frames +
+full-outer-join chains (the round-3 scale defect: a stopword SHOULD
+clause used to ship its entire match set through the exchange).
 
 Reference semantics held bit-exactly:
 
@@ -61,13 +63,24 @@ from pim_lucene_spark.functions import bm25
 from pim_lucene_spark.functions.sloppy import sloppy_freqs_postings
 from pim_lucene_spark.manifest import IndexManifest
 from pim_lucene_spark.sparkutil import (cached_parquet, local_empty,
-                                        manifest_scan_key, map_by_pid)
+                                        local_result, manifest_scan_key,
+                                        map_by_pid)
 from pim_lucene_spark.operators.search import (
+    MIXED_SCHEMA,
+    RESULT_SCHEMA,
     _assemble_by_term,
     _DecodeCtx,
+    _exec_payload,
+    _inline_ok,
     _kernel_task_count,
+    _owned_kernel,
     _phrase_match_counts,
+    _pid_file_groups,
+    _plain_payload,
     _resolve_norms_access,
+    _run_fused,
+    _run_inline,
+    _top_k,
     plan_queries,
     term_doc_freqs,
 )
@@ -538,10 +551,14 @@ def _eval_flat_batch(flat: list[dict], eval_leaf, precision: str,
 
 def _compound_core(payload: dict, pid: int,
                    per_field_by_term: dict[str, dict],
-                   resident: dict | None = None) -> pd.DataFrame:
-    """``resident`` (serving path): ``{field: (norms, live)}`` resident
-    blobs — skips the per-call norms/delete-mask file reads a kernel
-    task performs."""
+                   resident: dict | None = None,
+                   ctxs: dict | None = None) -> pd.DataFrame:
+    """``resident``: ``{field: (norms, live)}`` blobs the caller already
+    holds (the serving path's resident copies, the shared executor's
+    once-per-task reads) — skips the norms/delete-mask file reads the
+    exchange-fed kernel performs.  ``ctxs``: per-field decode caches
+    over the same rows, shared with the task's other kernels."""
+    shared = ctxs or {}
     P = payload["num_partitions"]
     k = payload["k"]
     precision = payload["precision"]
@@ -560,7 +577,8 @@ def _compound_core(payload: dict, pid: int,
             # enumerates docs from norms alone — skip the norms read
             continue
         if bt is not None:
-            ctxs[f] = _DecodeCtx(bt, payload, pid, ckey=fmeta["cache_key"])
+            ctxs[f] = shared.get(f) or _DecodeCtx(bt, payload, pid,
+                                                  ckey=fmeta["cache_key"])
         if resident is not None and f in resident:
             norms[f], live[f] = resident[f]
             continue
@@ -1253,47 +1271,67 @@ def _plan_aggregate_payload(spark: SparkSession,
     per-field payload + pushdown postings union.  ``postings`` is None
     when every clause analyzes to index-wide-absent terms (nothing to
     launch)."""
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-
     b = _SpecBuilder(spark, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
+    specs = b.specs(queries)
+    planned = _plan_compound(spark, manifests, specs, b.leaves, None,
+                             precision, **b.leaf_plan())
+    if planned is None:
+        return specs, None, None
+    payload, needed = planned
+    payload["_n_tasks"] = _kernel_task_count(
+        payload["num_partitions"], _sum_df(spark, manifests, needed))
+    return specs, payload, _union_scan(spark, manifests, needed,
+                                       payload["has_matchall"])
+
+
+def _plan_compound(spark: SparkSession | None,
+                   manifests: dict[str, IndexManifest], specs: list[dict],
+                   leaves: dict[str, list], k: int | None, precision: str,
+                   postings_cache_mb: int = 0,
+                   matchall_fields: set | None = None,
+                   extra_terms: dict | None = None,
+                   slops: dict[int, int] | None = None,
+                   syn_leaves: dict[str, list] | None = None,
+                   iv_leaves: dict[str, list] | None = None):
+    """Stats/weight planning of a spec batch (every field's leaves go
+    through ``plan_queries`` exactly like the engine search path) →
+    ``(payload, {field: needed terms})``, or ``None`` when no field has
+    postings to read or docs to enumerate.  The leaf arguments are the
+    :class:`_SpecBuilder`'s (:meth:`_SpecBuilder.leaf_plan`);
+    ``spark=None`` plans via pyarrow (the serving path)."""
+    matchall_fields = matchall_fields or set()
     clause_plan: dict[int, tuple] = {}
     syn_boosts: dict[int, tuple] = {}
     iv_specs: dict[int, tuple] = {}
-    total_df = 0
     leaf_offsets: dict[int, tuple] = {}
-    fields_payload, scans = {}, []
+    fields_payload: dict[str, dict] = {}
+    needed_by_field: dict[str, list] = {}
     num_partitions = None
     for f, m in manifests.items():
-        lv = b.leaves.get(f) or []
-        syn = b.syn_leaves.get(f) or []
-        iv = b.iv_leaves.get(f) or []
-        ma_here = f in b.matchall_fields
-        extra = b.extra_terms.get(f) or set()
+        lv = leaves.get(f) or []
+        syn = (syn_leaves or {}).get(f) or []
+        iv = (iv_leaves or {}).get(f) or []
+        ma_here = f in matchall_fields
+        extra = set((extra_terms or {}).get(f) or ())
         if not lv and not ma_here and not extra and not syn and not iv:
             continue
         if lv:
-            planned, needed = plan_queries(spark, m, lv, 1, precision,
+            planned, needed = plan_queries(spark, m, lv, k, precision,
                                            collect_offsets=leaf_offsets)
         else:
             planned, needed = [], set()
         needed = set(needed) | extra | _plan_syn_leaves(
             spark, m, syn, precision, f, clause_plan, syn_boosts) \
             | _plan_iv_leaves(spark, m, iv, f, clause_plan, iv_specs)
-        total_df += sum(term_doc_freqs(spark, m, sorted(needed)).values())
         num_partitions = m.num_partitions
         for sid, ts, w in planned:
             clause_plan[sid] = (f, tuple(ts), float(w),
-                                b.slops.get(sid, 0))
+                                int((slops or {}).get(sid, 0)))
         if not needed and not ma_here:
             continue
         avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
                                       precision)
+        needed_by_field[f] = sorted(needed)
         fields_payload[f] = {
             "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
             "cache_key": (m.build_id or m.index_dir, m.doc_count,
@@ -1303,36 +1341,51 @@ def _plan_aggregate_payload(spark: SparkSession,
             "num_segments": m.num_segments,
             "nb_doc_per_segment": m.nb_doc_per_segment,
         }
-        scans.append(
-            cached_parquet(spark, manifest_scan_key(m),
-                           *[m.chunk_path(c)
-                             for c in range(m.build_chunks)])
-            .filter(F.col("term").isin(list(needed)))
-            .withColumn("fld", F.lit(f)))
-    if not scans or not (clause_plan or b.matchall_fields
-                         or any(b.extra_terms.values())):
-        return specs, None, None
-    payload = {
+    if not fields_payload:
+        return None
+    return {
         "specs": specs,
         "clauses": clause_plan,
         "syn_boosts": syn_boosts,
         "iv_specs": iv_specs,
         "leaf_offsets": leaf_offsets,
         "fields": fields_payload,
-        "k": None,
+        "k": None if k is None else int(k),
         "precision": precision,
         "num_partitions": int(num_partitions),
-        "postings_cache_mb": 0,
-        "has_matchall": bool(b.matchall_fields),
-        "_n_tasks": _kernel_task_count(int(num_partitions), total_df),
-    }
-    postings = scans[0]
-    for s in scans[1:]:
-        postings = postings.unionByName(s)
-    if b.matchall_fields:
+        "postings_cache_mb": int(postings_cache_mb),
+        "has_matchall": bool(matchall_fields),
+    }, needed_by_field
+
+
+def _sum_df(spark, manifests: dict[str, IndexManifest],
+            needed_by_field: dict[str, list]) -> int:
+    """Σ doc_freq of every field's needed terms (the batch's postings
+    volume: task count and inline gate)."""
+    return sum(sum(term_doc_freqs(spark, manifests[f], ts).values())
+               for f, ts in needed_by_field.items() if ts)
+
+
+def _union_scan(spark: SparkSession, manifests: dict[str, IndexManifest],
+                needed_by_field: dict[str, list],
+                matchall: bool) -> DataFrame:
+    """Exchange-fallback input: per-field ``term IN`` pushdown scans
+    unioned with a field tag, plus one seed row per pid when a
+    MatchAllDocs clause must reach postings-less partitions."""
+    postings = None
+    for f, ts in needed_by_field.items():
+        m = manifests[f]
+        scan = (cached_parquet(spark, manifest_scan_key(m),
+                               *[m.chunk_path(c)
+                                 for c in range(m.build_chunks)])
+                .filter(F.col("term").isin(list(ts)))
+                .withColumn("fld", F.lit(f)))
+        postings = scan if postings is None else postings.unionByName(scan)
+    if matchall:
+        P = next(iter(manifests.values())).num_partitions
         postings = postings.unionByName(
-            _pid_seed(spark, int(num_partitions), postings.schema))
-    return specs, payload, postings
+            _pid_seed(spark, int(P), postings.schema))
+    return postings
 
 
 # ---------------------------------------------------------------------------
@@ -1602,6 +1655,22 @@ class _SpecBuilder:
             self.slops[d["sid"]] = slop
         return d
 
+    def specs(self, queries) -> list[dict]:
+        """Specs of ``(qid, BooleanQuery | DisMaxQuery)`` pairs on the
+        default field."""
+        from pim_lucene_spark.plans.boolean import BooleanQuery
+        return [self.bool_spec(qid, q, self.default_field)
+                if isinstance(q, BooleanQuery)
+                else self.dismax_spec(qid, q, self.default_field)
+                for qid, q in queries]
+
+    def leaf_plan(self) -> dict:
+        """The non-scored leaf lists :func:`_plan_compound` /
+        :func:`eval_compound` take as keyword arguments."""
+        return {"matchall_fields": self.matchall_fields,
+                "extra_terms": self.extra_terms, "slops": self.slops,
+                "syn_leaves": self.syn_leaves, "iv_leaves": self.iv_leaves}
+
     def bool_spec(self, qid, bq, field: str, inherit: float = 1.0) -> dict:
         eff = float(bq.boost) * inherit
         spec = {"qid": qid, "op": "bool", "msm": int(bq.min_should_match)}
@@ -1631,98 +1700,98 @@ def eval_compound(spark: SparkSession, manifests: dict[str, IndexManifest],
                   slops: dict[int, int] | None = None,
                   syn_leaves: dict[str, list] | None = None,
                   iv_leaves: dict[str, list] | None = None) -> DataFrame:
-    """Run prepared compound specs through the per-partition kernel.
+    """Run prepared compound specs through the shared file-owned executor.
 
-    One union scan (per-field ``term IN`` pushdown + field tag) →
-    ``groupBy(pid)`` kernel → global top-k window over ≤ P·k rows/query.
-    ``return_partial`` returns the pre-window per-partition frame — the
-    exact row set this plan shuffles — for plan-shape tests/benchmarks.
-    ``matchall_fields`` (from ``_SpecBuilder``) names fields whose norms
-    a MatchAllDocs clause enumerates; their payload entries load even
-    with no needed terms, and one null seed row per pid keeps every
-    partition's kernel task alive where the scan alone has no rows.
+    One ``Range → MapInPandas`` stage: each task reads its owned pids'
+    postings per field (``term IN`` + ``pid IN`` pushdown) and their
+    norms/live blobs once, composes per pid and emits per-pid top-k;
+    the driver merges the (score desc, doc asc) head-k into a job-free
+    local frame.  Below the inline gate the same task body runs
+    in-process (no job at all).  ``return_partial`` (and ``k=None``)
+    return the per-pid frame instead — ≤ P·k rows per query, the exact
+    rows the tasks emit — for plan-shape tests/benchmarks and clause-
+    frame consumers.  Layouts whose pid→file ownership cannot be
+    planned (URI paths) take the exchange fallback: a field-tagged
+    union scan → ``map_by_pid``.  ``matchall_fields`` (from
+    ``_SpecBuilder``) names fields whose norms a MatchAllDocs clause
+    enumerates; their payload entries load even with no needed terms,
+    and every pid is evaluated, postings or not.
     """
-    empty = local_empty(spark, COMPOUND_SCHEMA)
-    clause_plan: dict[int, tuple] = {}
-    syn_boosts: dict[int, tuple] = {}
-    iv_specs: dict[int, tuple] = {}
-    total_df = 0
-    leaf_offsets: dict[int, tuple] = {}
-    fields_payload: dict[str, dict] = {}
-    scans = []
-    num_partitions = None
-    for f, m in manifests.items():
-        lv = leaves.get(f) or []
-        syn = (syn_leaves or {}).get(f) or []
-        iv = (iv_leaves or {}).get(f) or []
-        ma_here = bool(matchall_fields) and f in matchall_fields
-        extra = set((extra_terms or {}).get(f) or ())
-        if not lv and not ma_here and not extra and not syn and not iv:
-            continue
-        if lv:
-            planned, needed = plan_queries(spark, m, lv, k, precision,
-                                           collect_offsets=leaf_offsets)
+    planned = _plan_compound(spark, manifests, specs, leaves, k, precision,
+                             postings_cache_mb, matchall_fields,
+                             extra_terms, slops, syn_leaves, iv_leaves)
+    if planned is None:
+        return local_empty(spark, COMPOUND_SCHEMA)
+    payload, needed = planned
+    total_df = _sum_df(spark, manifests, needed)
+    partial = return_partial or k is None
+    xp = _exec_payload(None, [payload], needed)
+    if _inline_ok(total_df, manifests.values()):
+        pdf = _run_inline(xp, manifests, "compound")
+    else:
+        n_tasks = _kernel_task_count(payload["num_partitions"], total_df)
+        groups = _pid_file_groups(manifests, n_tasks,
+                                  every_pid=payload["has_matchall"])
+        if groups is not None:
+            per_part = (spark.range(0, len(groups), 1, len(groups))
+                        .mapInPandas(_owned_kernel(xp, groups, "compound"),
+                                     COMPOUND_SCHEMA))
         else:
-            planned, needed = [], set()
-        needed = set(needed) | extra | _plan_syn_leaves(
-            spark, m, syn, precision, f, clause_plan, syn_boosts) \
-            | _plan_iv_leaves(spark, m, iv, f, clause_plan, iv_specs)
-        total_df += sum(term_doc_freqs(spark, m, sorted(needed)).values())
-        num_partitions = m.num_partitions
-        for sid, terms, w in planned:
-            clause_plan[sid] = (f, tuple(terms), float(w),
-                                int((slops or {}).get(sid, 0)))
-        if not needed and not ma_here:
+            per_part = map_by_pid(
+                _union_scan(spark, manifests, needed,
+                            payload["has_matchall"]),
+                n_tasks, _compound_kernel(payload), COMPOUND_SCHEMA)
+        if partial:
+            # k=None: every match, unordered (no per-qid head-k) — the
+            # clause-frame / nested-consumer contract, same as search()
+            return per_part
+        pdf = per_part.toPandas()
+    if pdf is None or not len(pdf):
+        return local_empty(spark, COMPOUND_SCHEMA)
+    return local_result(spark, pdf if partial else _top_k(pdf, k),
+                        COMPOUND_SCHEMA)
+
+
+def search_mixed(spark: SparkSession, manifest: IndexManifest, plain,
+                 compound, k: int, precision: str = "float32"
+                 ) -> DataFrame | None:
+    """One mixed ``FullTextIndex.query`` batch as ONE executor stage.
+
+    ``plain``: exact term/phrase ``(qid, text[, boost])`` tuples;
+    ``compound``: ``[(queries, precision), ...]`` groups of ``(qid,
+    BooleanQuery | DisMaxQuery)`` pairs whose clauses passed
+    :func:`clause_kernelable` (a group per scoring precision).  Both
+    payloads are planned once; the union of their terms is read once
+    per task, every kernel runs on the same rows, and the driver merges
+    the head-k per query — no Exchange, no Window, and no job at all
+    below the inline gate.  Returns RESULT_SCHEMA for a plain-only
+    batch, else the mixed schema (``freq`` DOUBLE, NULL ``freq``/``norm``
+    on compound rows) — exactly the per-kind union's schema.  ``None``
+    when pid→file ownership cannot be planned (the caller keeps its
+    per-kind routes)."""
+    manifests = {"": manifest}
+    payload, terms = (_plain_payload(spark, manifest, plain, k, precision)
+                      if plain else (None, []))
+    needed: dict[str, set] = {"": set(terms)}
+    comps = []
+    for queries, prec in compound:
+        if not queries:
             continue
-        avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
-                                      precision)
-        fields_payload[f] = {
-            "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
-            "cache_key": (m.build_id or m.index_dir, m.doc_count,
-                          m.sum_total_term_freq),
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-            "num_segments": m.num_segments,
-            "nb_doc_per_segment": m.nb_doc_per_segment,
-        }
-        scans.append(
-            cached_parquet(spark, manifest_scan_key(m),
-                           *[m.chunk_path(c)
-                             for c in range(m.build_chunks)])
-            .filter(F.col("term").isin(list(needed)))
-            .withColumn("fld", F.lit(f)))
-    if not scans:
-        return empty
-    payload = {
-        "specs": specs,
-        "clauses": clause_plan,
-        "syn_boosts": syn_boosts,
-        "iv_specs": iv_specs,
-        "leaf_offsets": leaf_offsets,
-        "fields": fields_payload,
-        "k": None if k is None else int(k),
-        "precision": precision,
-        "num_partitions": int(num_partitions),
-        "postings_cache_mb": int(postings_cache_mb),
-        "has_matchall": bool(matchall_fields),
-        "_n_tasks": _kernel_task_count(int(num_partitions), total_df),
-    }
-    postings = scans[0]
-    for s in scans[1:]:
-        postings = postings.unionByName(s)
-    if matchall_fields:
-        postings = postings.unionByName(
-            _pid_seed(spark, int(num_partitions), postings.schema))
-    per_part = map_by_pid(postings, payload["_n_tasks"],
-                          _compound_kernel(payload), COMPOUND_SCHEMA)
-    if return_partial or k is None:
-        # k=None: every match, unordered (no per-qid rank window) — the
-        # clause-frame / nested-consumer contract, same as search()
-        return per_part
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("rank"))
+        b = _SpecBuilder(spark, manifests, "")
+        planned = _plan_compound(spark, manifests, b.specs(queries),
+                                 b.leaves, k, prec, **b.leaf_plan())
+        if planned is None:
+            continue
+        comps.append(planned[0])
+        for f, ts in planned[1].items():
+            needed.setdefault(f, set()).update(ts)
+    mixed = any(queries for queries, _ in compound)
+    if payload is None and not comps:
+        return local_empty(spark, MIXED_SCHEMA if mixed else RESULT_SCHEMA)
+    needed = {f: sorted(ts) for f, ts in needed.items()}
+    return _run_fused(spark, manifests,
+                      _exec_payload(payload, comps, needed),
+                      _sum_df(spark, manifests, needed), k, mixed)
 
 
 BM25F_SCHEMA = T.StructType([
@@ -1927,9 +1996,7 @@ def search_compound_local(index, queries,
     """
     from pim_lucene_spark.operators.search import (_local_live,
                                                    _local_norms,
-                                                   _local_rows,
-                                                   plan_queries)
-    from pim_lucene_spark.plans.boolean import BooleanQuery
+                                                   _local_rows)
 
     from pim_lucene_spark.manifest import resolve_manifests
     manifests, default_field = resolve_manifests(
@@ -1938,57 +2005,12 @@ def search_compound_local(index, queries,
         raise ValueError("fields disagree on num_partitions; the "
                          "compound kernel needs one shared pid space")
     b = _SpecBuilder(None, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
+    specs = b.specs(queries)
     empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
         {"qid": np.int64, "doc_id": np.int64, "score": np.float64})
-
-    clause_plan: dict[int, tuple] = {}
-    syn_boosts: dict[int, tuple] = {}
-    iv_specs: dict[int, tuple] = {}
-    leaf_offsets: dict[int, tuple] = {}
-    fields_payload: dict[str, dict] = {}
-    ckeys: dict[str, tuple] = {}
-    needed_by_field: dict[str, list] = {}
     P = next(iter(manifests.values())).num_partitions
-    for f, m in manifests.items():
-        lv = b.leaves.get(f) or []
-        syn = b.syn_leaves.get(f) or []
-        iv = b.iv_leaves.get(f) or []
-        ma_here = f in b.matchall_fields
-        extra = b.extra_terms.get(f) or set()
-        if not lv and not ma_here and not extra and not syn and not iv:
-            continue
-        if lv:
-            planned, needed = plan_queries(None, m, lv, k, precision,
-                                           collect_offsets=leaf_offsets)
-        else:
-            planned, needed = [], set()
-        needed = set(needed) | extra | _plan_syn_leaves(
-            None, m, syn, precision, f, clause_plan, syn_boosts) \
-            | _plan_iv_leaves(None, m, iv, f, clause_plan, iv_specs)
-        for sid, ts, w in planned:
-            clause_plan[sid] = (f, tuple(ts), float(w),
-                                b.slops.get(sid, 0))
-        if not needed and not ma_here:
-            continue
-        avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
-                                      precision)
-        ckeys[f] = (m.build_id or m.index_dir, m.doc_count,
-                    m.sum_total_term_freq)
-        needed_by_field[f] = list(needed)
-        fields_payload[f] = {
-            "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
-            "cache_key": ckeys[f],
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-            "num_segments": m.num_segments,
-            "nb_doc_per_segment": m.nb_doc_per_segment,
-        }
+    planned = _plan_compound(None, manifests, specs, b.leaves, k, precision,
+                             postings_cache_mb, **b.leaf_plan())
     if facet_dim is not None:
         from pim_lucene_spark.operators.facets import facet_dir
         fdir = facet_dir(manifests[default_field], facet_dim)
@@ -1996,22 +2018,11 @@ def search_compound_local(index, queries,
             {"qid": np.int64, "value": str, "n": np.int64})
     elif agg_mode is not None:
         empty = _agg_mode_empty(agg_mode)
-    if not (clause_plan or b.matchall_fields
-            or any(b.extra_terms.values())) or not fields_payload:
+    if planned is None:
         return empty
-    payload = {
-        "specs": specs,
-        "clauses": clause_plan,
-        "syn_boosts": syn_boosts,
-        "iv_specs": iv_specs,
-        "leaf_offsets": leaf_offsets,
-        "fields": fields_payload,
-        "k": int(k),
-        "precision": precision,
-        "num_partitions": int(P),
-        "postings_cache_mb": int(postings_cache_mb),
-        "has_matchall": bool(b.matchall_fields),
-    }
+    payload, needed_by_field = planned
+    fields_payload = payload["fields"]
+    ckeys = {f: meta["cache_key"] for f, meta in fields_payload.items()}
     if facet_dim is not None:
         payload["facet"] = {"path": fdir}
     elif agg_mode is not None:
@@ -2052,9 +2063,7 @@ def search_compound_local(index, queries,
                 [["qid", "value", "n"]].reset_index(drop=True))
     if agg_mode is not None:
         return _agg_mode_merge(agg_mode, res)
-    return (res.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby("qid", sort=True).head(k).reset_index(drop=True))
+    return _top_k(res, k).reset_index(drop=True)
 
 
 def _agg_mode_empty(agg_mode: dict) -> pd.DataFrame:
@@ -2143,17 +2152,7 @@ def search_compound(spark: SparkSession,
     trees passed :func:`clause_kernelable`; callers route the rest to the
     join-chain plan.
     """
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-
     b = _SpecBuilder(spark, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
-    return eval_compound(spark, manifests, specs, b.leaves, k, precision,
-                         postings_cache_mb=postings_cache_mb,
-                         matchall_fields=b.matchall_fields,
-                         extra_terms=b.extra_terms, slops=b.slops,
-                         syn_leaves=b.syn_leaves, iv_leaves=b.iv_leaves)
+    return eval_compound(spark, manifests, b.specs(queries), b.leaves, k,
+                         precision, postings_cache_mb=postings_cache_mb,
+                         **b.leaf_plan())

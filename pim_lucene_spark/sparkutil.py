@@ -102,8 +102,10 @@ def local_result(spark: SparkSession, pdf: pd.DataFrame,
     The pyarrow-table entry point skips createDataFrame's pandas
     conversion machinery (measured 24 vs 38 ms per call for a 200-row
     result, quiet) and honors the declared schema exactly (nullability
-    included); any conversion/coercion surprise falls back to the
-    pandas path."""
+    included).  Only a schema mismatch disables the Arrow path for that
+    (session, schema); a conversion exception (one odd-dtype frame, a
+    transient failure) falls back to the pandas path for that call
+    alone."""
     if len(pdf) == 0:
         return local_empty(spark, schema)
     key = schema.json()
@@ -116,11 +118,14 @@ def local_result(spark: SparkSession, pdf: pd.DataFrame,
         except AttributeError:
             verified = None
     if verified is None or verified.get(key) is not False:
+        import pyarrow as pa
         try:
-            import pyarrow as pa
             df = spark.createDataFrame(
                 pa.Table.from_pandas(pdf, preserve_index=False),
                 schema=schema)
+        except Exception:
+            df = None
+        if df is not None:
             # verify the declared schema survived — once per (session,
             # schema) when the result is cacheable, every call otherwise
             if verified is None:
@@ -131,9 +136,6 @@ def local_result(spark: SparkSession, pdf: pd.DataFrame,
                 ok = True
             if ok:
                 return df
-        except Exception:
-            if verified is not None:
-                verified[key] = False
     return spark.createDataFrame(pdf, schema)
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from unittest.mock import patch
 
 out_dir, suffix = sys.argv[1], sys.argv[2]
 os.makedirs(out_dir, exist_ok=True)
@@ -71,12 +72,10 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         # the distributed plan used above the size gate (forced)
-        os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
-        try:
+        with patch.dict(os.environ,
+                        {"SPARK_GRAFT_LOCAL_ROUTE_POSTINGS": "0"}):
             plan = _capture(search(spark, manifest, qs, k=10,
                                    final_merge="window"))
-        finally:
-            del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
         with open(os.path.join(out_dir,
                                f"{name}_{suffix}_dist.txt"), "w") as f:
             f.write(plan)

@@ -33,7 +33,6 @@ def main() -> None:
     from pim_lucene_spark import IndexConfig
     from pim_lucene_spark.operators.index_build import build_index
     from pim_lucene_spark.operators import search as S
-    from pim_lucene_spark.functions import bm25
     from pim_lucene_spark.sparkutil import local_result
 
     docs = (spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
@@ -70,48 +69,34 @@ def main() -> None:
             k, precision = 10, "float32"
             t = {}
             tt = time.time()
-            gap_offsets: dict = {}
-            planned, needed_terms = S.plan_queries(
-                spark, manifest, queries, k, precision,
-                collect_offsets=gap_offsets)
+            payload, needed_terms = S._plain_payload(
+                spark, manifest, queries, k, precision)
             t["plan"] = time.time() - tt
-            avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                          manifest.doc_count, precision)
-            payload = {
-                "queries": planned, "k": int(k), "precision": precision,
-                "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b,
-                                          precision),
-                "num_partitions": manifest.num_partitions,
-                "num_segments": manifest.num_segments,
-                "norms_path": manifest.norms_path,
-                "cache_key": ("prof", manifest.doc_count,
-                              manifest.sum_total_term_freq),
-                "postings_cache_mb": 0,
-                "deletes_path": None,
-            }
-            if gap_offsets:
-                payload["offsets"] = gap_offsets
+            if payload is None:
+                print(name, rep, "no match: nothing to launch")
+                continue
             tt = time.time()
             dfs = S.term_doc_freqs(spark, manifest, list(needed_terms))
             n_tasks = S._kernel_task_count(manifest.num_partitions,
                                            sum(dfs.values()))
-            groups = S._postings_file_groups(manifest, n_tasks)
+            groups = S._pid_file_groups({"": manifest}, n_tasks)
             t["file_plan"] = time.time() - tt
-            payload = dict(payload, file_groups=groups,
-                           needed_terms=list(needed_terms))
+            if groups is None:
+                # uninspectable layout: search() takes the exchange plan,
+                # which this per-phase profile does not cover
+                print(name, rep, "no file plan: exchange route, skipped")
+                continue
+            xp = S._exec_payload(payload, [], {"": needed_terms})
             tt = time.time()
             per_part = (spark.range(0, len(groups), 1, len(groups))
-                        .mapInPandas(S._match_kernel_files(payload),
+                        .mapInPandas(S._owned_kernel(xp, groups, "plain"),
                                      S.RESULT_SCHEMA))
             t["plan_df"] = time.time() - tt
             tt = time.time()
             pdf = per_part.toPandas()
             t["job_toPandas"] = time.time() - tt
             tt = time.time()
-            if len(pdf):
-                pdf = (pdf.sort_values(["qid", "score", "doc_id"],
-                                       ascending=[True, False, True])
-                       .groupby("qid", sort=True).head(k))
+            pdf = S._top_k(pdf, k)
             sdf = local_result(spark, pdf, S.RESULT_SCHEMA)
             sdf.collect()
             t["merge_collect"] = time.time() - tt

@@ -162,11 +162,11 @@ def test_postings_file_groups_partition_pids(spark, tmp_index_dir):
             .withColumnRenamed("text", "content"))
     m = build_index(spark, docs, tmp_index_dir,
                     IndexConfig(8, 4, build_chunks=2), id_col="doc_id")
-    groups = S._postings_file_groups(m, 5)
+    groups = S._pid_file_groups({"": m}, 5)
     assert groups is not None and 1 <= len(groups) <= 5
     seen: list[int] = []
-    for files, pids in groups:
-        assert files and pids
+    for pids, files in groups:
+        assert files[""] and pids
         seen.extend(pids)
     assert sorted(seen) == sorted(set(seen))  # each pid exactly once
 
@@ -282,3 +282,38 @@ def test_interval_key_overflow_guard():
     with pytest.raises(OverflowError):
         _term_keys(_FakeTp(), np.zeros(4, dtype=np.int64),
                    ranks=np.array([0, 1, 2, 1 << 23], dtype=np.int64))
+
+
+class _FlakyArrowSession:
+    """Session proxy whose Arrow-table ``createDataFrame`` raises
+    ``fail`` times, then delegates; counts Arrow-path calls."""
+
+    def __init__(self, spark, fail: int):
+        self._spark = spark
+        self.fail = fail
+        self.arrow_calls = 0
+
+    def createDataFrame(self, data, schema=None, **kw):
+        import pyarrow as pa
+        if isinstance(data, pa.Table):
+            self.arrow_calls += 1
+            if self.fail:
+                self.fail -= 1
+                raise RuntimeError("injected Arrow conversion failure")
+        return self._spark.createDataFrame(data, schema, **kw)
+
+
+def test_local_result_arrow_failure_falls_back_once(spark):
+    """One Arrow exception falls back for that call only: the next call
+    takes the Arrow path again (only a schema mismatch is cached)."""
+    pdf = pd.DataFrame({"qid": np.array([1, 2], dtype=np.int64),
+                        "doc_id": np.array([7, 8], dtype=np.int64),
+                        "score": np.array([0.5, 0.25])})
+    flaky = _FlakyArrowSession(spark, fail=1)
+    first = local_result(flaky, pdf, SCHEMA)
+    assert flaky.arrow_calls == 1
+    assert sorted(r.doc_id for r in first.collect()) == [7, 8]
+    second = local_result(flaky, pdf, SCHEMA)
+    assert flaky.arrow_calls == 2
+    assert second.schema == SCHEMA
+    assert sorted(r.doc_id for r in second.collect()) == [7, 8]
